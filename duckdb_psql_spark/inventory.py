@@ -62,11 +62,14 @@ def _tune_tables(spark: SparkSession, sf_dir: str, *tables: str) -> None:
     Piped entries get this automatically from the compiler's
     path-literal scan (compiler._tune_for_statement_sources); callables
     compose DataFrames directly, so they declare their input tables
-    here. Same bands as session.tune_for_statement."""
+    here. Same bands and off-switch as the compiler's tuning."""
     import os as _os
 
+    from .compiler import read_psql_confs
     from .session import tune_for_statement
 
+    if read_psql_confs(spark)["spark.psql.stmtTune"] == "false":
+        return
     total = 0
     for t in tables:
         p = f"{sf_dir}/{t}.parquet"

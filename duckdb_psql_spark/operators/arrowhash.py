@@ -262,92 +262,6 @@ def minhash_sig_batch(texts, num_perm: int, shingle_k: int, a: np.ndarray, b: np
     return sig
 
 
-_ALPHA_BYTES = (
-    b"ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
-)
-_DIGIT_BYTES = b"0123456789"
-_PUNCT_BYTES = b".,;:!?"
-_SPACE_BYTES = b" "
-
-
-def _byte_lut(chars: bytes) -> np.ndarray:
-    lut = np.zeros(256, dtype=np.int64)
-    lut[list(chars)] = 1
-    return lut
-
-
-_LUTS = {
-    "alpha": _byte_lut(_ALPHA_BYTES),
-    "digit": _byte_lut(_DIGIT_BYTES),
-    "punct": _byte_lut(_PUNCT_BYTES),
-    "space": _byte_lut(_SPACE_BYTES),
-}
-
-
-def text_stats_batch(texts, low, with_score: bool):
-    """Per-row text statistics (operators/text.with_text_stats parity) in
-    one Arrow/numpy pass: codepoint length, token/unique-token counts
-    over the JVM-lowered text (``low`` — lowered in the JVM for Unicode
-    SpecialCasing parity, see _tokenize), ASCII-set character counts over
-    the original text (exact also in UTF-8 — ASCII bytes never occur
-    inside multibyte sequences), and the derived ratios with the SAME
-    IEEE double expression order as the JVM formulation, so results are
-    bit-identical. Returns (arrays dict, null_mask)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if isinstance(texts, pa.ChunkedArray):
-        texts = texts.combine_chunks()
-    if isinstance(low, pa.ChunkedArray):
-        low = low.combine_chunks()
-    null_mask = np.asarray(pc.is_null(texts))
-    n = len(texts)
-    n_chars = np.asarray(pc.utf8_length(texts).fill_null(0)).astype(np.int64)
-    toks = pc.split_pattern_regex(low, "[ \t\n\x0b\f\r]+")
-    t_o = np.asarray(toks.offsets).astype(np.int64)
-    n_words = t_o[1:] - t_o[:-1]
-    if null_mask.any():
-        n_words = np.where(null_mask, 0, n_words)
-    flat = pc.list_flatten(toks)
-    denc = flat.dictionary_encode()
-    idx = np.asarray(denc.indices).astype(np.int64)
-    doc_of = np.repeat(np.arange(n, dtype=np.int64), n_words)
-    nd = max(len(denc.dictionary), 1)
-    uniq_keys = np.unique(doc_of * nd + idx)
-    n_uniq = np.bincount(uniq_keys // nd, minlength=n).astype(np.int64)
-    # byte-range character-class counts over the ORIGINAL text bytes
-    t_offs, data = _string_buffers(texts)
-    counts = {}
-    for name, lut in _LUTS.items():
-        pref = np.zeros(len(data) + 1, dtype=np.int64)
-        if len(data):
-            np.cumsum(lut[data], out=pref[1:])
-        counts[name] = pref[t_offs[1:]] - pref[t_offs[:-1]]
-    nw1 = np.maximum(n_words, 1).astype(np.float64)
-    nc1 = np.maximum(n_chars, 1).astype(np.float64)
-    out = {
-        "n_chars_calc": n_chars,
-        "n_words": n_words,
-        "n_unique_words": n_uniq,
-        "lexical_diversity": n_uniq / nw1,
-        "alpha_ratio": counts["alpha"] / nc1,
-        "digit_ratio": counts["digit"] / nc1,
-        "punct_ratio": counts["punct"] / nc1,
-        "space_ratio": counts["space"] / nc1,
-        "avg_word_len": n_chars / nw1,
-    }
-    if with_score:
-        # exactly quality_score's expression tree, left-associated:
-        # ((0.35*length_ok + 0.25*min(lex*2,1)) + 0.25*alpha) + 0.15*(1-min(dig*5,1))
-        length_ok = np.where((n_words >= 5) & (n_words <= 100000), 1.0, 0.2)
-        lex2 = np.minimum(out["lexical_diversity"] * 2, 1.0)
-        dig5 = 1.0 - np.minimum(out["digit_ratio"] * 5, 1.0)
-        out["quality_score"] = (
-            (0.35 * length_ok + 0.25 * lex2) + 0.25 * out["alpha_ratio"]
-        ) + 0.15 * dig5
-    return out, null_mask
-
-
 def simhash_sig_batch(texts) -> np.ndarray:
     """64-bit SimHash per text, int64[n], value-identical to the JVM
     formulation in dedup.simhash_signatures(hash_mode='xxhash64'):

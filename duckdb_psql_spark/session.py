@@ -121,8 +121,8 @@ _TINY_DEFAULTS = {
     # ONE reduce task moves tens of MB fine; more just multiplies
     # task-launch overhead, and a single-partition agg output lets global
     # sorts skip the range-exchange sampling pass entirely. Sweep
-    # evidence: scripts/bench_warmup_sweep.py (p=1 beat p=4 in both
-    # interleaved reps). (At >= TINY_INPUT_BYTES AQE coalesces at
+    # evidence: FLOOR_ANALYSIS.md, "Round-5 second pass" (p=1 beat p=4
+    # in both interleaved reps). (At >= TINY_INPUT_BYTES AQE coalesces at
     # runtime instead.)
     "spark.sql.shuffle.partitions": "1",
     # Broadcast every dimension (all < 8 MB at tiny SF) so join plans are
@@ -155,9 +155,6 @@ def tune_for_input(spark: SparkSession, data_dir: str) -> int:
                 continue
     if total < TINY_INPUT_BYTES:
         profile = dict(_TINY_DEFAULTS)
-        override = os.environ.get("SPARK_GRAFT_TINY_SHUFFLE_PARTITIONS")
-        if override:
-            profile["spark.sql.shuffle.partitions"] = override
     else:
         profile = dict(_SCALE_DEFAULTS)
         # reduce-partition count scales with the data, and the two
@@ -250,34 +247,23 @@ def tune_for_statement(spark: SparkSession, stmt_bytes: int) -> None:
     Spark binds these confs when an action plans the query, not when
     the DataFrame is composed — with interleaved compose-then-run of
     several statements, the last-composed profile applies. Harness and
-    bench paths compose and execute one statement at a time.
-    Off-switch: SPARK_GRAFT_NO_STMT_TUNE=1.
+    bench paths compose and execute one statement at a time. The
+    compiler skips this call when spark.psql.stmtTune=false.
     """
-    if stmt_bytes <= 0 or os.environ.get("SPARK_GRAFT_NO_STMT_TUNE") == "1":
-        return
-    if spark.conf.get("spark.psql.stmtTune", "true") == "false":
+    if stmt_bytes <= 0:
         return
     mb = 1024 * 1024
     cores = spark.sparkContext.defaultParallelism
-    # NOTE "or" fallback requires an EMPTY default: a default of "0" is a
-    # truthy string, silently zeroing the cut (round-10 review find — it
-    # disabled the tiny band entirely for unset-env runs)
-    tiny_cut = int(os.environ.get("SPARK_GRAFT_STMT_TINY_BYTES") or STMT_TINY_BYTES)
-    if stmt_bytes < tiny_cut:
+    if stmt_bytes < STMT_TINY_BYTES:
         profile = dict(_TINY_DEFAULTS)
-        override = os.environ.get("SPARK_GRAFT_STMT_TINY_P")
-        if override:
-            # A/B knob for the tiny-band reduce-partition count
-            profile["spark.sql.shuffle.partitions"] = override
     elif stmt_bytes < STMT_SMALL_BYTES:
         profile = dict(_TINY_DEFAULTS)
         profile["spark.sql.shuffle.partitions"] = "8"
     elif stmt_bytes < LARGE_INPUT_BYTES:
         profile = dict(_SCALE_DEFAULTS)
         profile["spark.sql.shuffle.partitions"] = str(max(cores, 4))
-        div = int(os.environ.get("SPARK_GRAFT_STMT_SPLIT_DIV") or cores)
         profile["spark.sql.files.maxPartitionBytes"] = str(
-            min(max(stmt_bytes // max(div, 1), 8 * mb), 128 * mb)
+            min(max(stmt_bytes // max(cores, 1), 8 * mb), 128 * mb)
         )
     else:
         profile = dict(_SCALE_DEFAULTS)

@@ -10,13 +10,20 @@ to the unrewritten plan, narrow pipelines are left alone (scan
 parallelism preserved), and the off-switch works.
 """
 
-import os
-
-import pytest
+from contextlib import contextmanager
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+@contextmanager
+def _local_sort_off(psql):
+    psql.spark.conf.set("spark.psql.localSortSmall", "false")
+    try:
+        yield
+    finally:
+        psql.spark.conf.unset("spark.psql.localSortSmall")
 
 
 def _fresh(psql, text):
@@ -45,11 +52,8 @@ def test_rewrite_values_identical(psql, sf_dir):
         "group by l_returnflag, l_linestatus |> "
         "order by l_returnflag, l_linestatus"
     )
-    os.environ["SPARK_GRAFT_NO_LOCAL_SORT"] = "1"
-    try:
+    with _local_sort_off(psql):
         expected = _fresh(psql, q).collect()
-    finally:
-        os.environ.pop("SPARK_GRAFT_NO_LOCAL_SORT", None)
     got = _fresh(psql, q).collect()
     assert got == expected
 
@@ -83,11 +87,8 @@ def test_off_switch(psql, sf_dir):
         "select o_orderstatus, count() as n group by o_orderstatus |> "
         "order by n desc, o_orderstatus"
     )
-    os.environ["SPARK_GRAFT_NO_LOCAL_SORT"] = "1"
-    try:
+    with _local_sort_off(psql):
         plan = _plan(_fresh(psql, q))
-    finally:
-        os.environ.pop("SPARK_GRAFT_NO_LOCAL_SORT", None)
     assert "rangepartitioning" in plan
 
 
@@ -100,10 +101,7 @@ def test_order_by_non_projected_column(psql, sf_dir):
         "select o_custkey, max(o_totalprice) as m group by o_custkey |> "
         "select o_custkey |> order by o_custkey"
     )
-    os.environ["SPARK_GRAFT_NO_LOCAL_SORT"] = "1"
-    try:
+    with _local_sort_off(psql):
         expected = _fresh(psql, q).collect()
-    finally:
-        os.environ.pop("SPARK_GRAFT_NO_LOCAL_SORT", None)
     df = _fresh(psql, q)
     assert _fresh(psql, q).collect() == expected

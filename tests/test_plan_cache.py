@@ -3,8 +3,9 @@
 Compose cost is Python + ~400 py4j round-trips per statement (profiled:
 2.0s of the 6.5s sf0.1 interleaved suite). Repeated pure-query
 statements must return the SAME DataFrame (skipping compose) while every
-invalidation class — DDL/DML epoch, planning-conf change, on-disk data
-change, named-table sources, sequence access — forces a fresh compile.
+invalidation class — DDL/DML epoch, registered or planning conf change,
+on-disk data change, named-table sources, sequence access — forces a
+fresh compile.
 """
 
 import os
@@ -12,9 +13,11 @@ import shutil
 
 import pytest
 
+from duckdb_psql_spark.compiler import PSQL_CONFS, read_psql_confs
 from tests.conftest import SF_DIR
 
 LINEITEM = f"{SF_DIR}/lineitem.parquet"
+ORDERS = f"{SF_DIR}/orders.parquet"
 REGION = f"{SF_DIR}/region.parquet"
 
 Q = (
@@ -22,6 +25,10 @@ Q = (
     "|> select l_orderkey, l_quantity "
     "|> order by l_quantity desc, l_orderkey |> limit 5"
 )
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_pure_query_hit_returns_same_dataframe(psql):
@@ -146,3 +153,94 @@ def test_cache_hit_releases_prior_persisted_blocks(psql):
     psql.sql(Q)  # hit path must run the release loop
     assert not comp._persisted_blocks
     assert marker.storageLevel.useMemory is False
+
+
+def _flipped(default: str) -> str:
+    if default == "true":
+        return "false"
+    return "7" if default != "7" else "8"
+
+
+@pytest.mark.parametrize("key", sorted(PSQL_CONFS))
+def test_every_registered_conf_is_in_the_key(psql, key):
+    # the key is built from the same snapshot the pass gates read, so a
+    # flipped conf can never be answered by a plan compiled without it
+    spark, comp = psql.spark, psql._compiler
+    comp._confs = read_psql_confs(spark)
+    base = comp._plan_cache_key(Q)
+    assert base is not None
+    spark.conf.set(key, _flipped(PSQL_CONFS[key][0]))
+    try:
+        comp._confs = read_psql_confs(spark)
+        assert comp._plan_cache_key(Q) != base
+    finally:
+        spark.conf.unset(key)
+        comp._confs = read_psql_confs(spark)
+
+
+def test_local_sort_flip_recompiles_cached_statement(psql):
+    # a cached locally-sorted plan must not answer after the pass is
+    # switched off; the plan cache itself stays on
+    q = (
+        f"from '{ORDERS}' |> "
+        "select o_orderstatus, count() as n group by o_orderstatus |> "
+        "order by n desc, o_orderstatus"
+    )
+    a = psql.sql(q)
+    assert psql.sql(q) is a
+    assert "rangepartitioning" not in _plan(a)
+    psql.spark.conf.set("spark.psql.localSortSmall", "false")
+    try:
+        b = psql.sql(q)
+        assert b is not a
+        assert "rangepartitioning" in _plan(b)
+    finally:
+        psql.spark.conf.unset("spark.psql.localSortSmall")
+
+
+def test_unregistered_conf_read_raises(psql):
+    with pytest.raises(KeyError):
+        psql._compiler._pass_on("spark.psql.notRegistered")
+
+
+def test_snapshot_reads_set_and_default_values(spark):
+    spark.conf.set("spark.psql.eagerAgg", "false")
+    spark.conf.set("spark.psql.cluster.codec", "a -> b, c")
+    try:
+        confs = read_psql_confs(spark)
+    finally:
+        spark.conf.unset("spark.psql.eagerAgg")
+        spark.conf.unset("spark.psql.cluster.codec")
+    assert confs["spark.psql.eagerAgg"] == "false"
+    assert confs["spark.psql.cluster.codec"] == "a -> b, c"
+    assert confs["spark.psql.planCache"] == PSQL_CONFS["spark.psql.planCache"][0]
+    assert list(confs) == list(PSQL_CONFS)
+
+
+def test_current_setting_statements_never_cached(psql):
+    # current_setting() splices the value of ANY conf at compile time,
+    # including confs outside the key
+    stmt = "select current_setting('spark.psql.testSetting') as v"
+    psql.spark.conf.set("spark.psql.testSetting", "a")
+    try:
+        assert psql.sql(stmt).collect()[0][0] == "a"
+        psql.spark.conf.set("spark.psql.testSetting", "b")
+        assert psql.sql(stmt).collect()[0][0] == "b"
+    finally:
+        psql.spark.conf.unset("spark.psql.testSetting")
+
+
+def test_non_integer_numeric_conf_is_an_error(psql):
+    from duckdb_psql_spark.errors import PsqlCompileError
+
+    stmt = (
+        f"from '{ORDERS}' |> join '{REGION}' on o_custkey = r_regionkey "
+        "|> select count() as n"
+    )
+    psql.spark.conf.set("spark.psql.broadcastHint.maxBytes", "20MB")
+    try:
+        with pytest.raises(PsqlCompileError, match="broadcastHint.maxBytes"):
+            psql.sql(stmt)
+    finally:
+        psql.spark.conf.unset("spark.psql.broadcastHint.maxBytes")
+    assert psql.sql(stmt).collect()[0][0] >= 0

@@ -431,36 +431,6 @@ def test_q21_window_formulation_single_fact_shuffle(spark, sf):
     assert plan.count("lineitem.parquet") == 1
 
 
-def test_decorrelate_exists_opt_in_value_parity(psql, sf_dir):
-    """The opt-in EXISTS decorrelation (spark.psql.decorrelateExists=true,
-    compiler._try_decorrelate_exists): agg + left join + array exists()
-    must return exactly the rows of Spark's native correlated plan —
-    including the NOT EXISTS null-guard — and the enabled plan must
-    actually decorrelate (no LeftSemi/LeftAnti)."""
-    q = f"""
-    from '{sf_dir}/supplier.parquet' |>
-    as s join '{sf_dir}/lineitem.parquet' as l1 on s.s_suppkey = l1.l_suppkey |>
-    select s_name, l_orderkey as ok, l_suppkey as sk |>
-    where exists (select 1 from '{sf_dir}/lineitem.parquet' l2
-                  where l2.l_orderkey = ok and l2.l_suppkey <> sk) |>
-    where not exists (select 1 from '{sf_dir}/lineitem.parquet' l3
-                      where l3.l_orderkey = ok and l3.l_suppkey <> sk
-                        and l3.l_quantity > 45) |>
-    select s_name, count() as n group by s_name |> order by s_name
-    """
-    native = [tuple(r) for r in psql.sql(q).collect()]
-    psql.spark.conf.set("spark.psql.decorrelateExists", "true")
-    try:
-        df = psql.sql(q)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "LeftSemi" not in plan and "LeftAnti" not in plan
-        assert "exists(" in plan or "collect_list" in plan
-        decorr = [tuple(r) for r in df.collect()]
-    finally:
-        psql.spark.conf.set("spark.psql.decorrelateExists", "false")
-    assert decorr == native and native
-
-
 def test_dup_spans_plan_no_udfs_no_cartesian(spark, sf):
     """duplicate_spans: pure codegen (no Python/UDF nodes), no cartesian
     product, and the dup-gram join is keyed on the hash (both sides
@@ -528,8 +498,6 @@ def test_align_exists_probes_reuses_exchange(psql, spark, sf_dir):
     over the same source narrows to EXISTS(C AND NOT coalesce(D,false))
     — pure logic, no FD/FK assumptions — so both probes scan identical
     columns and Spark's ReuseExchange builds the probe relation once."""
-    import os
-
     q = (
         f"from '{sf_dir}/orders.parquet' |> "
         "select o_orderkey as ok, o_custkey as ck, o_orderdate as od |> "
@@ -544,10 +512,8 @@ def test_align_exists_probes_reuses_exchange(psql, spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in plan
     n_on = df.collect()[0].n
-    # the plan cache keys on statement text, not env — bypass it so the
-    # off-switch leg actually recompiles
-    os.environ["SPARK_GRAFT_NO_ALIGN_EXISTS"] = "1"
-    os.environ["SPARK_GRAFT_NO_PLAN_CACHE"] = "1"
+    # the conf is part of the plan-cache key, so the off leg recompiles
+    psql.spark.conf.set("spark.psql.alignExistsProbes", "false")
     try:
         df_off = psql.sql(q)
         assert "ReusedExchange" not in (
@@ -555,8 +521,7 @@ def test_align_exists_probes_reuses_exchange(psql, spark, sf_dir):
         )
         assert df_off.collect()[0].n == n_on
     finally:
-        del os.environ["SPARK_GRAFT_NO_ALIGN_EXISTS"]
-        del os.environ["SPARK_GRAFT_NO_PLAN_CACHE"]
+        psql.spark.conf.unset("spark.psql.alignExistsProbes")
 
 
 def test_align_exists_probes_leaves_nonmatching(psql, sf_dir):
